@@ -21,10 +21,11 @@ are parameterless, so nothing needs server-side state), and the
 create result carries the IPC-serialized dataset schema so clients
 can bind result metadata before executing.
 
-Scale posture: Flight is a RESULT boundary, not a data-movement path —
-queries should reduce (aggregates, top-k) before crossing it.  The
-``max_result_rows`` guard refuses to materialize oversized results on
-the driver, same discipline as ``sources.read_arrow_ipc``.
+GetFlightInfo only analyzes a statement: the FlightInfo carries the
+analyzed schema and unknown (-1) counts, and the statement runs once,
+at DoGet.  This module keeps only the Flight framing; statement
+execution, write routing, the result guard and parameter binding live
+in ``statements``.
 """
 
 from __future__ import annotations
@@ -34,24 +35,12 @@ from collections.abc import Callable
 import pyarrow as pa
 from pyspark.sql import DataFrame
 
+from core2_spark.statements import Statements, bind_parameters
+
 try:  # grpc support is optional in pyarrow builds
     import pyarrow.flight as _flight
 except ImportError:  # pragma: no cover
     _flight = None
-
-
-def df_to_arrow(df: DataFrame, max_result_rows: int | None = None) -> pa.Table:
-    """Spark DataFrame → Arrow table (Spark 4's native toArrow), with a
-    driver-materialization guard."""
-    if max_result_rows is not None:
-        n = df.limit(max_result_rows + 1).count()
-        if n > max_result_rows:
-            raise ValueError(
-                f"result exceeds max_result_rows={max_result_rows}; Flight is "
-                "a result boundary — aggregate or LIMIT before fetching, or "
-                "raise the cap deliberately"
-            )
-    return df.toArrow()
 
 
 class SqlFlightServer(_flight.FlightServerBase if _flight else object):
@@ -74,21 +63,16 @@ class SqlFlightServer(_flight.FlightServerBase if _flight else object):
         if _flight is None:  # pragma: no cover
             raise RuntimeError("pyarrow was built without flight support")
         super().__init__(location)
-        self._executor = executor
-        self._max_result_rows = max_result_rows
-        self._engine = engine
-
-    def _run(self, sql: str) -> pa.Table:
-        return df_to_arrow(self._executor(sql), self._max_result_rows)
+        self._statements = Statements(executor, engine, max_result_rows)
 
     # -- FlightSQL catalog metadata -----------------------------------
     CATALOG = "core2"
     DB_SCHEMA = "default"
 
     def _table_names(self) -> list[str]:
-        if self._engine is None:
+        if self._statements.read_only:
             return []
-        return sorted(self._engine._all_tables())
+        return sorted(self._statements.engine()._all_tables())
 
     def _metadata_table(self, name: str, payload: bytes) -> pa.Table:
         """Result sets for the FlightSQL catalog commands, with the
@@ -132,58 +116,61 @@ class SqlFlightServer(_flight.FlightServerBase if _flight else object):
         raise _flight.FlightServerError(f"unsupported FlightSQL command {name}")
 
     # -- Flight protocol ----------------------------------------------
+    @staticmethod
+    def _decode(command: bytes) -> tuple[str | None, str | None, bytes]:
+        """A descriptor command or ticket → ``(FlightSQL message name,
+        statement text, payload)``.  The name is None for the legacy
+        raw-SQL envelope; the text is None for a catalog command."""
+        from core2_spark import flightsql_proto as fsql
+
+        parsed = fsql.unpack_any(command)
+        if parsed is None:
+            return None, command.decode(), b""
+        name, payload = parsed
+        if name == "CommandStatementQuery":
+            return name, fsql.parse_statement_query(payload), payload
+        if name == "TicketStatementQuery":
+            return name, fsql.parse_statement_ticket(payload).decode(), payload
+        if name == "CommandPreparedStatementQuery":
+            # stateless prepared statements: the handle is the SQL
+            sql = fsql.parse_prepared_statement_handle(payload).decode()
+            return name, sql, payload
+        return name, None, payload
+
     def get_flight_info(self, context, descriptor):
         """GetFlightInfo: FlightSQL Any-wrapped commands get the
         protocol-correct envelope (statement queries answer with an
         Any-wrapped TicketStatementQuery whose handle is the query
         text — the server is stateless; catalog commands answer with
         the command itself as the ticket, as the spec prescribes).
-        Anything else is the legacy envelope: raw SQL bytes."""
+        Anything else is the legacy envelope: raw SQL bytes.  Counts
+        are -1 (unknown), which the spec allows."""
         from core2_spark import flightsql_proto as fsql
 
         cmd = descriptor.command
-        parsed = fsql.unpack_any(cmd)
-        if parsed is None:  # legacy raw-SQL envelope
-            sql = cmd.decode()
-            table = self._run(sql)
-            ticket = sql.encode()
+        name, sql, payload = self._decode(cmd)
+        if sql is None:
+            schema = self._metadata_table(name, payload).schema
         else:
-            name, payload = parsed
-            if name == "CommandStatementQuery":
-                sql = fsql.parse_statement_query(payload)
-                table = self._run(sql)
-                ticket = fsql.ticket_statement_query(sql.encode())
-            elif name == "CommandPreparedStatementQuery":
-                # stateless prepared statements: the handle is the SQL
-                sql = fsql.parse_prepared_statement_handle(payload).decode()
-                table = self._run(sql)
-                ticket = cmd
-            else:
-                table = self._metadata_table(name, payload)
-                ticket = cmd
+            schema = self._statements.describe(sql)
+        ticket = (
+            fsql.ticket_statement_query(sql.encode())
+            if name == "CommandStatementQuery"
+            else cmd
+        )
         return _flight.FlightInfo(
-            table.schema,
+            schema,
             descriptor,
             [_flight.FlightEndpoint(_flight.Ticket(ticket), [])],
-            table.num_rows,
-            table.nbytes,
+            -1,
+            -1,
         )
 
     def do_get(self, context, ticket):
-        from core2_spark import flightsql_proto as fsql
-
-        raw = ticket.ticket
-        parsed = fsql.unpack_any(raw)
-        if parsed is None:  # legacy envelope
-            return _flight.RecordBatchStream(self._run(raw.decode()))
-        name, payload = parsed
-        if name == "TicketStatementQuery":
-            sql = fsql.parse_statement_ticket(payload).decode()
-            return _flight.RecordBatchStream(self._run(sql))
-        if name == "CommandPreparedStatementQuery":
-            sql = fsql.parse_prepared_statement_handle(payload).decode()
-            return _flight.RecordBatchStream(self._run(sql))
-        return _flight.RecordBatchStream(self._metadata_table(name, payload))
+        name, sql, payload = self._decode(ticket.ticket)
+        if sql is None:
+            return _flight.RecordBatchStream(self._metadata_table(name, payload))
+        return _flight.RecordBatchStream(self._statements.read(sql))
 
     # -- FlightSQL prepared statements (actions) ------------------------
     def list_actions(self, context):
@@ -209,16 +196,12 @@ class SqlFlightServer(_flight.FlightServerBase if _flight else object):
                     "ActionCreatePreparedStatementRequest"
                 )
             sql = fsql.parse_action_create_prepared_statement_request(parsed[1])
-            schema_bytes = b""
             try:
-                # analysis-only: Spark schema → Arrow schema, serialized
-                # as an IPC-encapsulated message per the spec
-                from pyspark.sql.pandas.types import to_arrow_schema
-
-                df = self._executor(sql)
-                schema_bytes = to_arrow_schema(df.schema).serialize().to_pybytes()
+                # analysis only, serialized as an IPC-encapsulated
+                # message per the spec
+                schema_bytes = self._statements.describe(sql).serialize().to_pybytes()
             except Exception:
-                pass  # schema optional; execute still works
+                schema_bytes = b""  # schema optional; execute still works
             yield _flight.Result(
                 pa.py_buffer(
                     fsql.action_create_prepared_statement_result(
@@ -234,110 +217,59 @@ class SqlFlightServer(_flight.FlightServerBase if _flight else object):
             )
 
     def do_put(self, context, descriptor, reader, writer):
-        """Write path, two envelopes:
+        """Write path and parameter binding:
 
-        - FlightSQL ``CommandStatementUpdate``: the SQL DML dialect
-          (INSERT/UPDATE/DELETE/ERASE) runs as one engine transaction;
+        - FlightSQL ``CommandStatementUpdate`` and
+          ``CommandPreparedStatementUpdate``: the statement, bound to
+          the stream's parameter row, runs as one engine transaction;
           the app-metadata response is a ``DoPutUpdateResult`` (-1 =
           count unknown — DML compiles against the pre-tx snapshot,
           counting would double-execute it);
+        - ``CommandPreparedStatementQuery``: binds the parameter row
+          and answers with the bound handle;
         - legacy JSON ``{"table": ..., "tx_time": ...?}``: the Arrow
           stream commits atomically as one submit_tx Put."""
-        import json
-
-        if self._engine is None:
-            raise _flight.FlightServerError(
-                "this server is read-only (no engine attached)"
-            )
         from core2_spark import flightsql_proto as fsql
-        from core2_spark.engine import Put
 
         parsed = fsql.unpack_any(descriptor.command)
-        if parsed is not None:
-            name, payload = parsed
+        if parsed is None:
+            import json
+
+            from core2_spark.engine import Put
+
+            engine = self._statements.engine()
+            spec = json.loads(descriptor.command.decode())
+            rows = engine.spark.createDataFrame(reader.read_all().to_pandas())
+            engine.submit_tx([Put(spec["table"], rows)], tx_time=spec.get("tx_time"))
+            return
+        name, payload = parsed
+        params = reader.read_all()  # bound parameters; empty for an update
+        if name == "CommandStatementUpdate":
+            self._statements.write([fsql.parse_statement_update(payload)])
+        elif name in ("CommandPreparedStatementQuery", "CommandPreparedStatementUpdate"):
+            handle = fsql.parse_prepared_statement_handle(payload).decode()
+            sql = _bind_parameters(handle, params)
             if name == "CommandPreparedStatementQuery":
                 # parameter binding (the ADBC flow for `... WHERE x = ?`):
-                # the stream carries one record batch of parameter
-                # values; the server is stateless, so the reply's app
-                # metadata returns an UPDATED handle — the statement
-                # text with the values substituted as SQL literals.
-                handle = fsql.parse_prepared_statement_handle(payload)
-                params = reader.read_all()
-                bound = _bind_parameters(handle.decode(), params)
+                # the server is stateless, so the reply's app metadata
+                # returns an UPDATED handle — the bound statement text
                 writer.write(
-                    pa.py_buffer(
-                        fsql.do_put_prepared_statement_result(bound.encode())
-                    )
+                    pa.py_buffer(fsql.do_put_prepared_statement_result(sql.encode()))
                 )
                 return
-            if name == "CommandStatementUpdate":
-                sql = fsql.parse_statement_update(payload)
-                reader.read_all()  # drain the (empty) bound-params stream
-            elif name == "CommandPreparedStatementUpdate":
-                params = reader.read_all()
-                sql = _bind_parameters(
-                    fsql.parse_prepared_statement_handle(payload).decode(), params
-                )
-            else:
-                raise _flight.FlightServerError(
-                    f"unsupported FlightSQL DoPut command {name}"
-                )
-            self._engine.sql_dml(sql)
-            writer.write(pa.py_buffer(fsql.do_put_update_result(-1)))
-            return
-
-        spec = json.loads(descriptor.command.decode())
-        table = reader.read_all()
-        rows = self._engine.spark.createDataFrame(table.to_pandas())
-        self._engine.submit_tx(
-            [Put(spec["table"], rows)], tx_time=spec.get("tx_time")
-        )
+            self._statements.write([sql])
+        else:
+            raise _flight.FlightServerError(
+                f"unsupported FlightSQL DoPut command {name}"
+            )
+        writer.write(pa.py_buffer(fsql.do_put_update_result(-1)))
 
 
 def _bind_parameters(sql: str, params: pa.Table) -> str:
-    """Substitute ``?`` placeholders (in order, outside string
-    literals) with the first row of ``params`` rendered as SQL
-    literals.  FlightSQL binds parameters as an Arrow record batch;
-    with a stateless handle the bound statement IS the new handle."""
-    if params is None or params.num_rows == 0 or params.num_columns == 0:
-        return sql
-    row = [col[0].as_py() for col in params.columns]
-
-    def lit(v) -> str:
-        if v is None:
-            return "NULL"
-        if isinstance(v, bool):
-            return "TRUE" if v else "FALSE"
-        if isinstance(v, (int, float)):
-            return repr(v)
-        if isinstance(v, (bytes, bytearray)):
-            return "X'" + bytes(v).hex() + "'"
-        return "'" + str(v).replace("'", "''") + "'"
-
-    out: list[str] = []
-    i, n, p = 0, len(sql), 0
-    while i < n:
-        c = sql[i]
-        if c == "'":  # skip string literals ('' escapes)
-            j = i + 1
-            while j < n:
-                if sql[j] == "'":
-                    if j + 1 < n and sql[j + 1] == "'":
-                        j += 2
-                        continue
-                    break
-                j += 1
-            out.append(sql[i : j + 1])
-            i = j + 1
-            continue
-        if c == "?" and p < len(row):
-            out.append(lit(row[p]))
-            p += 1
-            i += 1
-            continue
-        out.append(c)
-        i += 1
-    return "".join(out)
+    """Bind the first row of ``params`` to the ``?`` placeholders:
+    FlightSQL sends parameter values as an Arrow record batch."""
+    values = [col[0].as_py() for col in params.columns] if params.num_rows else []
+    return bind_parameters(sql, values)
 
 
 def fetch_sql(location: str, sql: str) -> pa.Table:

@@ -10,10 +10,9 @@ One read surface, two encodings:
   - anything else → JSON ``{"columns": [...], "rows": [[...], ...]}``
     (the curl/browser path);
 - ``POST /tx`` with ``{"statements": ["...", ...], "tx_time": ...?}``
-  → the statements run as ONE engine transaction via
-  ``Engine.sql_dml_many`` (requires an attached engine); response
-  carries the committed transaction time;
-- ``GET /tables`` → the table catalog (requires an attached engine);
+  → the statements run as ONE engine transaction; response carries
+  the committed transaction time;
+- ``GET /tables`` → the table catalog;
 - ``GET /basis`` → the current log head serialized as a portable
   basis token; ``POST /query`` accepts an optional ``"basis"`` field
   carrying such a token, so a client can pin one snapshot and run
@@ -24,11 +23,9 @@ One read surface, two encodings:
   ``Accept`` — an HTTP consumer can tail the transaction log with
   nothing but a cursor over its last-seen system time.
 
-Like the Flight server, HTTP is a RESULT boundary: the
-``max_result_rows`` guard refuses to materialize unreduced scans on
-the driver.  The temporal dialect flows through unchanged since
-execution goes through the supplied executor (typically
-``Snapshot.sql``).
+This module keeps only the HTTP framing; statement execution, the
+result guard and the read-only rule live in ``statements``.  Any
+failure is a 400 carrying the error message.
 """
 
 from __future__ import annotations
@@ -37,11 +34,12 @@ import json
 import threading
 from collections.abc import Callable
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
+from urllib.parse import parse_qs, urlparse
 
 import pyarrow as pa
 from pyspark.sql import DataFrame
 
-from core2_spark.flight_server import df_to_arrow
+from core2_spark.statements import Statements
 
 ARROW_MIME = "application/vnd.apache.arrow.stream"
 
@@ -73,10 +71,7 @@ class SqlHttpServer:
         max_result_rows: int = 1_000_000,
         engine=None,
     ):
-        self._executor = executor
-        self._max_result_rows = max_result_rows
-        self._engine = engine
-        outer = self
+        stmts = Statements(executor, engine, max_result_rows)
 
         class Handler(BaseHTTPRequestHandler):
             def log_message(self, fmt, *args):  # quiet test output
@@ -89,144 +84,86 @@ class SqlHttpServer:
                 self.end_headers()
                 self.wfile.write(body)
 
-            def _error(self, code: int, message: str) -> None:
-                self._send(code, json.dumps({"error": message}).encode(), "application/json")
+            def _json(self, code: int, obj) -> None:
+                self._send(code, json.dumps(obj).encode(), "application/json")
 
             def do_GET(self):
-                from urllib.parse import parse_qs, urlparse
-
-                parsed = urlparse(self.path)
-                if parsed.path == "/changes":
-                    return self._do_changes(parse_qs(parsed.query))
-                if parsed.path == "/basis":
-                    if outer._engine is None:
-                        return self._error(400, "no engine attached")
-                    from core2_spark.basis import basis_to_json
-
-                    token = basis_to_json(outer._engine.db().basis)
-                    return self._send(
-                        200,
-                        json.dumps({"basis": token}).encode(),
-                        "application/json",
-                    )
-                if parsed.path != "/tables":
-                    return self._error(404, f"no route {self.path}")
-                if outer._engine is None:
-                    return self._error(400, "no engine attached")
-                body = json.dumps(
-                    {"tables": sorted(outer._engine._all_tables())}
-                ).encode()
-                self._send(200, body, "application/json")
-
-            def _do_changes(self, params: dict) -> None:
-                if outer._engine is None:
-                    return self._error(400, "no engine attached")
-                try:
-                    table = params["table"][0]
-                    since = params["since"][0]
-                except (KeyError, IndexError):
-                    return self._error(
-                        400, "required query params: table, since (until optional)"
-                    )
-                until = params.get("until", [None])[0]
-                try:
-                    feed = outer._engine.db().changes(
-                        table, since=since, until=until
-                    )
-                    result = df_to_arrow(feed, outer._max_result_rows)
-                except Exception as exc:
-                    return self._error(400, str(exc) or repr(exc))
-                if ARROW_MIME in self.headers.get("Accept", ""):
-                    self._send(200, _table_to_ipc(result), ARROW_MIME)
-                else:
-                    self._send(200, _table_to_json(result), "application/json")
+                self._respond(
+                    {"/tables": self._tables, "/basis": self._basis,
+                     "/changes": self._changes}
+                )
 
             def do_POST(self):
-                if self.path == "/tx":
-                    return self._do_tx()
-                if self.path == "/xtql":
-                    return self._do_xtql()
-                if self.path != "/query":
-                    return self._error(404, f"no route {self.path}")
+                self._respond(
+                    {"/query": self._query, "/xtql": self._xtql, "/tx": self._tx}
+                )
+
+            def _respond(self, routes: dict) -> None:
+                """Run the route; an Arrow result is sent as IPC or JSON
+                by ``Accept``, anything else as JSON."""
+                route = routes.get(urlparse(self.path).path)
+                if route is None:
+                    return self._json(404, {"error": f"no route {self.path}"})
+                try:
+                    out = route()
+                except Exception as exc:  # any failure is the client's 400
+                    return self._json(400, {"error": str(exc) or repr(exc)})
+                if not isinstance(out, pa.Table):
+                    self._json(200, out)
+                elif ARROW_MIME in self.headers.get("Accept", ""):
+                    self._send(200, _table_to_ipc(out), ARROW_MIME)
+                else:
+                    self._send(200, _table_to_json(out), "application/json")
+
+            def _body(self, field: str, nonempty_list: bool = False) -> dict:
+                """The JSON request body; ``field`` is required."""
                 try:
                     n = int(self.headers.get("Content-Length", "0"))
                     spec = json.loads(self.rfile.read(n).decode())
-                    sql = spec["sql"]
-                except (ValueError, KeyError) as exc:
-                    return self._error(400, f"bad request body: {exc!r}")
+                    value = spec[field]
+                except (ValueError, KeyError, TypeError) as exc:
+                    raise ValueError(f"bad request body: {exc!r}") from exc
+                if nonempty_list and not (isinstance(value, list) and value):
+                    raise ValueError(f"bad request body: {field} must be a non-empty list")
+                return spec
+
+            def _tables(self):
+                return {"tables": sorted(stmts.engine()._all_tables())}
+
+            def _basis(self):
+                from core2_spark.basis import basis_to_json
+
+                return {"basis": basis_to_json(stmts.snapshot().basis)}
+
+            def _changes(self):
+                params = parse_qs(urlparse(self.path).query)
                 try:
-                    token = spec.get("basis")
-                    if token is not None:
-                        if outer._engine is None:
-                            return self._error(
-                                400, "basis tokens need an attached engine"
-                            )
-                        from core2_spark.basis import basis_from_json
+                    table, since = params["table"][0], params["since"][0]
+                except (KeyError, IndexError):
+                    raise ValueError(
+                        "required query params: table, since (until optional)"
+                    ) from None
+                until = params.get("until", [None])[0]
+                feed = stmts.snapshot().changes(table, since=since, until=until)
+                return stmts.to_arrow(feed)
 
-                        df = outer._engine.db(basis_from_json(token)).sql(sql)
-                    else:
-                        df = outer._executor(sql)
-                    table = df_to_arrow(df, outer._max_result_rows)
-                except Exception as exc:  # surface executor errors as 400s
-                    return self._error(400, repr(exc))
-                if ARROW_MIME in self.headers.get("Accept", ""):
-                    self._send(200, _table_to_ipc(table), ARROW_MIME)
-                else:
-                    self._send(200, _table_to_json(table), "application/json")
+            def _query(self):
+                spec = self._body("sql")
+                return stmts.read(spec["sql"], spec.get("basis"))
 
-            def _do_xtql(self):
+            def _xtql(self):
                 """``POST /xtql`` with ``{"query": [<pipeline ops>],
                 "basis": token?}`` — the reference serves its pipeline
                 language over HTTP as JSON; the ops are exactly the
-                xtql.py dict representation.  Same dual Arrow/JSON
-                response negotiation as /query."""
-                if outer._engine is None:
-                    return self._error(400, "no engine attached")
-                try:
-                    n = int(self.headers.get("Content-Length", "0"))
-                    spec = json.loads(self.rfile.read(n).decode())
-                    pipeline = spec["query"]
-                    assert isinstance(pipeline, list) and pipeline
-                except (ValueError, KeyError, AssertionError) as exc:
-                    return self._error(400, f"bad request body: {exc!r}")
-                try:
-                    token = spec.get("basis")
-                    if token is not None:
-                        from core2_spark.basis import basis_from_json
+                xtql.py dict representation."""
+                spec = self._body("query", nonempty_list=True)
+                snap = stmts.snapshot(spec.get("basis"))
+                return stmts.to_arrow(snap.xtql(spec["query"]))
 
-                        snap = outer._engine.db(basis_from_json(token))
-                    else:
-                        snap = outer._engine.db()
-                    table = df_to_arrow(
-                        snap.xtql(pipeline), outer._max_result_rows
-                    )
-                except Exception as exc:
-                    return self._error(400, repr(exc))
-                if ARROW_MIME in self.headers.get("Accept", ""):
-                    self._send(200, _table_to_ipc(table), ARROW_MIME)
-                else:
-                    self._send(200, _table_to_json(table), "application/json")
-
-            def _do_tx(self):
-                if outer._engine is None:
-                    return self._error(400, "no engine attached")
-                try:
-                    n = int(self.headers.get("Content-Length", "0"))
-                    spec = json.loads(self.rfile.read(n).decode())
-                    statements = spec["statements"]
-                    assert isinstance(statements, list) and statements
-                except (ValueError, KeyError, AssertionError) as exc:
-                    return self._error(400, f"bad request body: {exc!r}")
-                try:
-                    basis = outer._engine.sql_dml_many(
-                        statements, tx_time=spec.get("tx_time")
-                    )
-                except Exception as exc:
-                    return self._error(400, str(exc) or repr(exc))
-                body = json.dumps(
-                    {"tx_time": basis.current_time.isoformat()}
-                ).encode()
-                self._send(200, body, "application/json")
+            def _tx(self):
+                spec = self._body("statements", nonempty_list=True)
+                basis = stmts.write(spec["statements"], tx_time=spec.get("tx_time"))
+                return {"tx_time": basis.current_time.isoformat()}
 
         self._httpd = ThreadingHTTPServer(("127.0.0.1", port), Handler)
         self.port = self._httpd.server_address[1]

@@ -26,9 +26,10 @@ stream.  Execute's max-row count is not honored (all rows stream, no
 PortalSuspended) — stock drivers send 0 (= no limit).
 
 COPY and auth methods beyond trust are not implemented — the same
-"preliminary driver support" tier as the Flight SQL boundary.  Like
-Flight/HTTP, pgwire is a RESULT boundary with the ``max_result_rows``
-guard.
+"preliminary driver support" tier as the Flight SQL boundary.  This
+module keeps only the wire framing; statement execution, write
+routing, the result guard and parameter binding live in
+``statements``.
 """
 
 from __future__ import annotations
@@ -40,37 +41,27 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame
 
-from core2_spark.flight_server import df_to_arrow
+from core2_spark.sql_dml import write_verb
+from core2_spark.statements import Statements, bind_parameters
 
-# PostgreSQL type OIDs for the text-format encoding of Spark types —
-# keyed by BOTH Spark simpleString names (bigint, double) and Arrow
-# type names (int64, float64, bool), since row descriptions are built
-# from whichever schema is at hand.
+# PostgreSQL type OIDs for the text-format encoding, keyed by Arrow type
+# name (``str(pa.DataType)`` up to its first "(" or "[").
 _OID = {
-    "boolean": 16,
     "bool": 16,
-    "bigint": 20,
     "int64": 20,
-    "smallint": 21,
     "int16": 21,
-    "int": 23,
-    "integer": 23,
     "int32": 23,
     "double": 701,
-    "float64": 701,
     "float": 700,
-    "float32": 700,
-    "date": 1082,
     "date32": 1082,
     "timestamp": 1114,
-    "timestamp_ntz": 1114,
     "string": 25,
 }
 _TEXT_OID = 25
 
 
-def _spark_type_oid(simple: str) -> int:
-    base = simple.split("(")[0].split("[")[0]
+def _type_oid(arrow_type) -> int:
+    base = str(arrow_type).split("(")[0].split("[")[0]
     return _OID.get(base, _TEXT_OID)
 
 
@@ -80,6 +71,14 @@ def _msg(tag: bytes, payload: bytes) -> bytes:
 
 def _cstr(s: str) -> bytes:
     return s.encode() + b"\x00"
+
+
+def _command_tag(verb: str) -> str:
+    """CommandComplete tag for a write.  Row counts are unreported (DML
+    compiles against the pre-tx snapshot; counting would double-execute
+    it), but drivers parse a count field, and INSERT's tag carries an
+    oid field before it."""
+    return "INSERT 0 0" if verb == "INSERT" else f"{verb} 0"
 
 
 class PgWireServer:
@@ -93,16 +92,7 @@ class PgWireServer:
         max_result_rows: int = 1_000_000,
         engine=None,
     ):
-        outer_executor = executor
-        outer_max = max_result_rows
-        outer_engine = engine
-
-        # create/refresh/drop: materialized-view maintenance — in this
-        # dialect those verbs exist only for MATERIALIZED VIEW, and
-        # Engine.sql_dml rejects anything else loudly
-        _DML = ("insert", "update", "delete", "erase", "merge", "patch",
-                "assert", "create", "refresh", "drop", "vacuum",
-                "optimize")
+        stmts = Statements(executor, engine, max_result_rows)
 
         class Handler(socketserver.BaseRequestHandler):
             def _send(self, data: bytes) -> None:
@@ -152,31 +142,21 @@ class PgWireServer:
                     self._error(f"unsupported protocol code {code}")
                     return False
 
-            def _row_description_raw(self, names_types) -> bytes:
+            def _row_description(self, schema) -> bytes:
                 fields = b"".join(
-                    _cstr(name)
+                    _cstr(field.name)
                     + struct.pack(
                         "!IhIhih",
                         0,  # table oid
                         0,  # attnum
-                        _spark_type_oid(type_str),
+                        _type_oid(field.type),
                         -1,  # typlen (varlena)
                         -1,  # typmod
                         0,  # text format
                     )
-                    for name, type_str in names_types
+                    for field in schema
                 )
-                return _msg(
-                    b"T", struct.pack("!h", len(names_types)) + fields
-                )
-
-            def _row_description(self, table) -> bytes:
-                return self._row_description_raw(
-                    [
-                        (name, str(table.schema.field(name).type))
-                        for name in table.column_names
-                    ]
-                )
+                return _msg(b"T", struct.pack("!h", len(schema)) + fields)
 
             def _send_data_rows(self, table) -> None:
                 cols = [table.column(c).to_pylist() for c in table.column_names]
@@ -194,43 +174,33 @@ class PgWireServer:
                     self._send(_msg(b"D", row))
 
             @staticmethod
-            def _dml_tag(sql: str) -> str | None:
-                """CommandComplete tag if ``sql`` is a DML statement
-                the engine runs at index time, else None.  Row counts
-                are unreported (DML compiles against the pre-tx
-                snapshot; counting would double-execute), matching the
-                FlightSQL boundary's -1 convention."""
-                head = sql.lstrip().split(None, 1)
-                word = head[0].lower() if head else ""
-                if word not in _DML:
-                    return None
-                return {"insert": "INSERT 0 0", "update": "UPDATE 0",
-                        "delete": "DELETE 0", "erase": "ERASE 0",
-                        "merge": "MERGE 0", "patch": "PATCH 0",
-                        "assert": "ASSERT",
-                        "create": "CREATE MATERIALIZED VIEW",
-                        "refresh": "REFRESH MATERIALIZED VIEW",
-                        "drop": "DROP MATERIALIZED VIEW",
-                        "vacuum": "VACUUM",
-                        "optimize": "OPTIMIZE"}[word]
+            def _is_read(sql: str) -> bool:
+                return bool(sql) and write_verb(sql) is None
 
-            def _run_query(self, sql: str) -> None:
-                sql = sql.strip().rstrip(";")
+            def _portal_table(self, portal: dict):
+                """Run the portal's read once, lazily: Describe and
+                Execute share the result (drivers Describe right before
+                Execute; running twice would double-execute)."""
+                if "table" not in portal:
+                    portal["table"] = stmts.read(portal["sql"])
+                return portal["table"]
+
+            def _execute(self, portal: dict, describe: bool) -> None:
+                """Run the portal's statement and send its result; a
+                simple Query sends the RowDescription too (``describe``),
+                Execute leaves it to Describe."""
+                sql = portal["sql"]
                 if not sql:
                     self._send(_msg(b"I", b""))  # EmptyQueryResponse
                     return
-                tag = self._dml_tag(sql)
-                if tag is not None:
-                    if outer_engine is None:
-                        raise ValueError(
-                            "DML over pgwire needs an attached engine "
-                            "(PgWireServer(engine=...))"
-                        )
-                    outer_engine.sql_dml(sql)
-                    self._send(_msg(b"C", _cstr(tag)))
+                verb = write_verb(sql)
+                if verb is not None:
+                    stmts.write([sql])
+                    self._send(_msg(b"C", _cstr(_command_tag(verb))))
                     return
-                table = df_to_arrow(outer_executor(sql), outer_max)
-                self._send(self._row_description(table))
+                table = self._portal_table(portal)
+                if describe:
+                    self._send(self._row_description(table.schema))
                 self._send_data_rows(table)
                 self._send(_msg(b"C", _cstr(f"SELECT {table.num_rows}")))
 
@@ -239,27 +209,6 @@ class PgWireServer:
             def _read_cstr(body: bytes, i: int) -> tuple[str, int]:
                 j = body.index(b"\x00", i)
                 return body[i:j].decode(), j + 1
-
-            @staticmethod
-            def _pg_literal(raw: bytes | None) -> str:
-                if raw is None:
-                    return "NULL"
-                return "'" + raw.decode().replace("'", "''") + "'"
-
-            def _portal_table(self, portal: dict):
-                """Execute the portal's query once, lazily: Describe
-                and Execute share the result (drivers Describe right
-                before Execute; running twice would double-execute).
-                DML portals have no row description (NoData) — they
-                run at Execute time."""
-                if "table" not in portal:
-                    sql = portal["sql"]
-                    portal["table"] = (
-                        None
-                        if not sql or self._dml_tag(sql) is not None
-                        else df_to_arrow(outer_executor(sql), outer_max)
-                    )
-                return portal["table"]
 
             def _handle_extended(self, tag: bytes, body: bytes) -> None:
                 if tag == b"P":  # Parse
@@ -279,20 +228,16 @@ class PgWireServer:
                     i += 2 + 2 * nfmt  # param format codes (text assumed)
                     (nparams,) = struct.unpack_from("!h", body, i)
                     i += 2
-                    params: list[bytes | None] = []
+                    params: list[str | None] = []
                     for _ in range(nparams):
                         (ln,) = struct.unpack_from("!i", body, i)
                         i += 4
                         if ln == -1:
                             params.append(None)
                         else:
-                            params.append(body[i : i + ln])
+                            params.append(body[i : i + ln].decode())
                             i += ln
-                    sql = self._stmts[stmt]
-                    # substitute $n with SQL literals, highest first so
-                    # $12 never matches inside $1
-                    for n in range(len(params), 0, -1):
-                        sql = sql.replace(f"${n}", self._pg_literal(params[n - 1]))
+                    sql = bind_parameters(self._stmts[stmt], params)
                     self._portals[portal] = {"sql": sql}
                     self._send(_msg(b"2", b""))  # BindComplete
                     return
@@ -305,52 +250,27 @@ class PgWireServer:
                         # parameterless after Bind-time substitution
                         self._send(_msg(b"t", struct.pack("!h", 0)))
                         sql = self._stmts[name]
-                        if not sql:
-                            self._send(_msg(b"n", b""))  # NoData
+                        if self._is_read(sql):
+                            # analysis only: Describe must not execute
+                            self._send(self._row_description(stmts.describe(sql)))
                         else:
-                            # ANALYSIS ONLY: Describe must not execute
-                            # the query — Spark's analyzed schema gives
-                            # the row description for free
-                            df = outer_executor(sql)
-                            self._send(
-                                self._row_description_raw(
-                                    [
-                                        (f.name, f.dataType.simpleString())
-                                        for f in df.schema.fields
-                                    ]
-                                )
-                            )
+                            self._send(_msg(b"n", b""))  # NoData
                         return
                     portal = self._portals.get(name)
                     if portal is None:
                         raise ValueError(f"unknown portal {name!r}")
-                    table = self._portal_table(portal)
-                    if table is None:
+                    if self._is_read(portal["sql"]):
+                        table = self._portal_table(portal)
+                        self._send(self._row_description(table.schema))
+                    else:  # writes run at Execute time
                         self._send(_msg(b"n", b""))  # NoData
-                    else:
-                        self._send(self._row_description(table))
                     return
                 if tag == b"E":  # Execute (max-rows count ignored)
                     name, _ = self._read_cstr(body, 0)
                     portal = self._portals.get(name)
                     if portal is None:
                         raise ValueError(f"unknown portal {name!r}")
-                    dml = self._dml_tag(portal["sql"]) if portal["sql"] else None
-                    if dml is not None:
-                        if outer_engine is None:
-                            raise ValueError(
-                                "DML over pgwire needs an attached engine "
-                                "(PgWireServer(engine=...))"
-                            )
-                        outer_engine.sql_dml(portal["sql"])
-                        self._send(_msg(b"C", _cstr(dml)))
-                        return
-                    table = self._portal_table(portal)
-                    if table is None:
-                        self._send(_msg(b"I", b""))  # EmptyQueryResponse
-                        return
-                    self._send_data_rows(table)
-                    self._send(_msg(b"C", _cstr(f"SELECT {table.num_rows}")))
+                    self._execute(portal, describe=False)
                     return
                 if tag == b"C":  # Close statement/portal
                     kind, body_rest = body[:1], body[1:]
@@ -385,7 +305,10 @@ class PgWireServer:
                         if tag == b"Q":
                             sql = body.rstrip(b"\x00").decode()
                             try:
-                                self._run_query(sql)
+                                self._execute(
+                                    {"sql": sql.strip().rstrip(";")},
+                                    describe=True,
+                                )
                             except Exception as exc:
                                 # str() carries the analyzer message;
                                 # pyspark exception reprs are often empty

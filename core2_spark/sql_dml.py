@@ -93,6 +93,23 @@ _DELETE = re.compile(
     r"(?:\s+WHERE\s+(?P<where>.+))?$",
     re.IGNORECASE | re.DOTALL,
 )
+# The leading keyword of every statement pattern in this module: the
+# log DML above, MERGE, and the maintenance statements further down.
+# CREATE/REFRESH/DROP exist here only for MATERIALIZED VIEW; any other
+# shape starting with one of these words is a write that parse_dml
+# rejects loudly, never a read.
+_WRITE_HEAD = re.compile(
+    r"^\s*(INSERT|PATCH|UPDATE|DELETE|ERASE|MERGE|ASSERT"
+    r"|CREATE|REFRESH|DROP|VACUUM|OPTIMIZE)\b",
+    re.IGNORECASE,
+)
+
+
+def write_verb(statement: str) -> str | None:
+    """The upper-cased leading keyword when ``statement`` is a write
+    this module compiles (``Engine.sql_dml_many`` runs it), else None."""
+    m = _WRITE_HEAD.match(statement)
+    return m[1].upper() if m else None
 
 
 # -- RECORDS literals (XTDB v2 `INSERT INTO t RECORDS {...}` /

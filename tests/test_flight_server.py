@@ -3,19 +3,14 @@ round-trip, temporal dialect included."""
 
 from __future__ import annotations
 
-import shutil
-
 import pytest
 
 from core2_spark.engine import Engine, Put
 
-ROOT = "/root/repo/_data/flight_test"
-
 
 @pytest.fixture
-def engine(spark):
-    shutil.rmtree(ROOT, ignore_errors=True)
-    return Engine(spark, ROOT)
+def engine(spark, tmp_path):
+    return Engine(spark, str(tmp_path / "engine"))
 
 
 def test_flight_sql_roundtrip(spark, engine):
@@ -140,6 +135,9 @@ def test_flightsql_protocol_envelope(spark, engine):
         got = client.do_get(info.endpoints[0].ticket).read_all()
         client.close()
         assert got.to_pydict()["px"] == [111.0, 200.0]
+        # FlightInfo only analyzes: the statement runs once, at DoGet
+        assert info.schema == got.schema
+        assert info.total_records == -1
 
         # the temporal dialect flows through the FlightSQL envelope too
         jan = fetch_flightsql(

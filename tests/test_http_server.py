@@ -4,20 +4,16 @@ both encodings, temporal dialect included."""
 from __future__ import annotations
 
 import json
-import shutil
 import urllib.request
 
 import pytest
 
 from core2_spark.engine import Engine, Put
 
-ROOT = "/root/repo/_data/http_test"
-
 
 @pytest.fixture
-def engine(spark):
-    shutil.rmtree(ROOT, ignore_errors=True)
-    return Engine(spark, ROOT)
+def engine(spark, tmp_path):
+    return Engine(spark, str(tmp_path / "engine"))
 
 
 def test_http_query_roundtrip(spark, engine):
@@ -79,6 +75,19 @@ def test_http_result_size_guard(spark, engine):
         assert err.value.code == 400
         ok = http_query(server.port, "SELECT COUNT(*) AS n FROM trades")
         assert ok["rows"] == [[50]]
+        # no engine attached: writes and basis tokens are 400s
+        for path, body in (
+            ("/tx", {"statements": ["DELETE FROM trades WHERE id = 1"]}),
+            ("/query", {"sql": "SELECT COUNT(*) AS n FROM trades", "basis": "{}"}),
+        ):
+            req = urllib.request.Request(
+                f"http://127.0.0.1:{server.port}{path}",
+                data=json.dumps(body).encode(),
+                headers={"Content-Type": "application/json"},
+            )
+            with pytest.raises(urllib.error.HTTPError) as err:
+                urllib.request.urlopen(req)
+            assert err.value.code == 400
     finally:
         server.shutdown()
 

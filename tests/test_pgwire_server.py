@@ -4,7 +4,6 @@ queries — temporal dialect included — and survives errors."""
 
 from __future__ import annotations
 
-import shutil
 import socket
 import struct
 
@@ -12,13 +11,10 @@ import pytest
 
 from core2_spark.engine import Engine, Put
 
-ROOT = "/root/repo/_data/pgwire_test"
-
 
 @pytest.fixture
-def engine(spark):
-    shutil.rmtree(ROOT, ignore_errors=True)
-    return Engine(spark, ROOT)
+def engine(spark, tmp_path):
+    return Engine(spark, str(tmp_path / "engine"))
 
 
 class MiniPgClient:
@@ -260,6 +256,24 @@ def test_pgwire_extended_query_protocol(spark, engine):
         client.execute("p2")
         _, _, rows, err = client.sync_and_collect()
         assert err is None and rows == [["300.0"]]
+
+        # binding is one left-to-right scan: a bound value is never
+        # substituted into, a "$1" inside a statement literal stays,
+        # and a trailing backslash cannot end its literal early
+        client.parse("pair", "SELECT $1 AS a, $2 AS b")
+        client.bind("p3", "pair", ["x", "cost $1"])
+        client.execute("p3")
+        _, _, rows, err = client.sync_and_collect()
+        assert err is None and rows == [["x", "cost $1"]]
+        client.bind("p4", "pair", ["x\\", "y"])
+        client.execute("p4")
+        _, _, rows, err = client.sync_and_collect()
+        assert err is None and rows == [["x\\", "y"]]
+        client.parse("memo", "SELECT 'pay $1' AS memo, px FROM trades WHERE sym = $1")
+        client.bind("p5", "memo", ["MSFT"])
+        client.execute("p5")
+        _, _, rows, err = client.sync_and_collect()
+        assert err is None and rows == [["pay $1", "200.0"]]
 
         # error recovery: bind to an unknown statement errors, further
         # messages are skipped until Sync, then the session works

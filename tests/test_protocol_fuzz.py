@@ -12,7 +12,6 @@ usable, and prepared handles must be reusable."""
 from __future__ import annotations
 
 import random
-import shutil
 
 import pytest
 
@@ -26,15 +25,12 @@ from core2_spark.engine import Engine, Put
 pytestmark = pytest.mark.slow
 
 
-ROOT = "/root/repo/_data/protocol_fuzz_test"
-
 N_STATEMENTS = 24
 
 
 @pytest.fixture
-def engine(spark):
-    shutil.rmtree(ROOT, ignore_errors=True)
-    eng = Engine(spark, ROOT)
+def engine(spark, tmp_path):
+    eng = Engine(spark, str(tmp_path / "engine"))
     rows = [
         (i, ["AAPL", "MSFT", "GOOG", None][i % 4], float(i * 7 % 50), i % 5)
         for i in range(40)
@@ -97,7 +93,7 @@ def _gen_statements(seed: int) -> list[str]:
 def _expected(engine, sql: str):
     """(columns, text rows) through the server's own arrow conversion,
     so text formatting matches what pgwire puts on the wire."""
-    from core2_spark.flight_server import df_to_arrow
+    from core2_spark.statements import df_to_arrow
 
     table = df_to_arrow(engine.db().sql(sql), 1 << 20)
     cols = table.schema.names
