@@ -18,19 +18,15 @@ duplicates), not just row counts.
 
 from __future__ import annotations
 
+from functools import reduce
+from operator import and_
+
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from core2_spark.functions.text import fingerprint, tokens
-
-
-def _cpu_spread(df: DataFrame) -> DataFrame:
-    """Round-robin explicit-count spread before CPU-heavy map work —
-    see plans.spread_partitions for the full AQE-starvation story."""
-    from core2_spark.plans import spread_partitions
-
-    return spread_partitions(df)
+from core2_spark.plans import spread_partitions
 
 
 def exact_dedup_groups(df: DataFrame, text_col: str = "text") -> DataFrame:
@@ -86,44 +82,73 @@ def assert_bounded_blocks(
         )
 
 
-def salted_pair_sides(
-    a: DataFrame,
-    a_id_col: str,
-    b: DataFrame,
-    block_cols_a: tuple[str, ...] = (),
-    buckets: int = 32,
-) -> tuple[DataFrame, DataFrame]:
-    """Spread a within-block pair join's quadratic work across
-    ``buckets`` tasks.  A block-keyed self-join hashes each block to
+PAIR_SALT = 32
+
+
+def block_pairs(
+    df: DataFrame,
+    id_col: str,
+    block_cols: tuple[str, ...],
+    cols: tuple[str, ...],
+    b_hint: str | None = None,
+) -> DataFrame:
+    """Every unordered pair of ``df`` rows that share all
+    ``block_cols`` values, once, as ``(a_id, b_id, a_<c>, b_<c>)`` for
+    each ``c`` in ``cols``, with ``a_id < b_id``.  A NULL block key
+    pairs with nothing, as in SQL.  ``b_hint`` is a join hint for the
+    replicated side (``"shuffle_hash"``/``"shuffle_merge"``).
+
+    The join is SALTED: a block-keyed self-join hashes each block to
     ONE shuffle partition, so a single task owns the whole block's
     O(block²) comparisons — the sf1 sweep caught one (lang, source)
-    block running ~20 minutes on one core while 15 sat idle.  The fix:
-    hash-salt the a-side once (``_ps_a``), replicate the b-side across
-    every salt value (``_ps_b``), and add ``_ps_a == _ps_b`` to the
-    join keys.  Each (a, b) pair still meets exactly once — at a's
-    salt — while one block's pairs now spread over ``buckets`` tasks.
-    The b-side shuffle grows ``buckets``×, which is the point: pair
+    block running ~20 minutes on one core while 15 sat idle.  The
+    a-side is hash-salted once (``_ps_a``), the b-side replicated
+    across every salt value (``_ps_b``), and ``_ps_a == _ps_b`` joins
+    with the block keys.  Each ordered pair still meets exactly once —
+    at a's salt — while one block's pairs spread over ``PAIR_SALT``
+    tasks.
+    The b-side shuffle grows ``PAIR_SALT``×, which is the point: pair
     CPU, not shuffle bytes, is the binding cost.
 
-    ``block_cols_a`` must be the a-side's block join columns: the
-    a-side is explicitly ``repartition(buckets, block_cols + salt)``'d
+    The a-side is explicitly ``repartition(PAIR_SALT, blocks + salt)``'d
     because AQE's SIZE-based partition coalescing otherwise collapses
     this CPU-heavy but byte-light shuffle right back to a handful of
     tasks (duplicated trigram strings compress ~30×; observed: the
     salted sf1 join re-coalesced to 3 partitions).  A user-specified
     partition count is not coalescible, and the b-side exchange must
-    co-partition with it, so the join genuinely runs at ``buckets``
-    tasks."""
-    a2 = a.withColumn(
-        "_ps_a",
-        F.pmod(F.xxhash64(F.col(a_id_col)), F.lit(buckets)).cast("int"),
+    co-partition with it, so the join genuinely runs at ``PAIR_SALT``
+    tasks.
+
+    Callers filter and project the result, and Catalyst folds their
+    filters into the join condition.  ``a_id < b_id`` is a filter, not
+    a join conjunct, so that a caller's ONE filter (prune & similarity
+    in a single ``filter``) lands after it: the per-pair similarity
+    then runs once per unordered pair instead of once per ordered
+    meeting (tests/test_plans.py pins the order)."""
+
+    def side(s: str) -> DataFrame:
+        return df.select(
+            F.col(id_col).alias(f"{s}_id"),
+            *[F.col(c).alias(f"{s}_{c}") for c in (*block_cols, *cols)],
+        )
+
+    a = side("a").withColumn(
+        "_ps_a", F.pmod(F.xxhash64(F.col("a_id")), F.lit(PAIR_SALT)).cast("int")
     ).repartition(
-        buckets, *[F.col(c) for c in block_cols_a], F.col("_ps_a")
+        PAIR_SALT, *[F.col(f"a_{c}") for c in block_cols], F.col("_ps_a")
     )
-    b2 = b.withColumn(
-        "_ps_b", F.explode(F.sequence(F.lit(0), F.lit(buckets - 1)))
+    b = side("b").withColumn(
+        "_ps_b", F.explode(F.sequence(F.lit(0), F.lit(PAIR_SALT - 1)))
     )
-    return a2, b2
+    if b_hint is not None:
+        b = b.hint(b_hint)
+    conds = [F.col(f"a_{c}") == F.col(f"b_{c}") for c in block_cols]
+    conds.append(F.col("_ps_a") == F.col("_ps_b"))
+    return (
+        a.join(b, reduce(and_, conds))
+        .filter(F.col("a_id") < F.col("b_id"))
+        .select("a_id", "b_id", *[f"{s}_{c}" for c in cols for s in ("a", "b")])
+    )
 
 
 def token_set(text_col: Column) -> Column:
@@ -200,7 +225,7 @@ def minhash_candidate_pairs(
     # turned from overhead into a wall.  CollapseProject will not
     # inline a non-cheap alias referenced k times, so the two-step
     # select is a real materialization barrier.
-    itemized = _cpu_spread(df).select(
+    itemized = spread_partitions(df).select(
         F.col(id_col),
         *[F.col(c) for c in block_cols],
         items_fn(F.col(text_col)).alias("_items"),
@@ -246,8 +271,6 @@ def minhash_candidate_pairs(
     # is byte-light (md5 strings, heavily compressed) but its
     # per-bucket pair expansion is the CPU wall, and AQE would
     # coalesce a size-based layout back to a couple of tasks
-    from core2_spark.plans import spread_partitions
-
     left = spread_partitions(
         small.select(F.col(id_col).alias("a_id"), *join_keys), *join_keys
     )
@@ -309,15 +332,11 @@ def minhash_near_duplicates(
     )
     # the verify join's per-pair set intersection dominates: spread
     # the shingle-array construction and the join probe side
-    sets_df = _cpu_spread(df).select(
+    sets_df = spread_partitions(df).select(
         F.col(id_col), items_fn(F.col(text_col)).alias("items")
     )
     a_sets = sets_df.select(F.col(id_col).alias("a_id"), F.col("items").alias("a_items"))
     b_sets = sets_df.select(F.col(id_col).alias("b_id"), F.col("items").alias("b_items"))
-    # materialize the jaccard once (filter + projection would evaluate
-    # array_intersect twice); +1e-9 before rounding: Jaccard is a
-    # small-denominator rational that can sit exactly on the 6-decimal
-    # boundary, where engines' ROUND implementations disagree.
     # Join strategy: see the verify_join docstring.  In "fast" mode
     # the candidate pairs stay ROUND-ROBIN spread on purpose: AQE's
     # runtime stats demote both set joins to broadcasts, which
@@ -332,27 +351,38 @@ def minhash_near_duplicates(
         # at 4g×8 tasks, reproduced) — SHJ is unusable at tight heap
         # whatever the data.  Sort-merge spills on both sides.
         joined = (
-            _cpu_spread(pairs).join(a_sets.hint("shuffle_merge"), "a_id")
+            spread_partitions(pairs).join(a_sets.hint("shuffle_merge"), "a_id")
             .join(b_sets.hint("shuffle_merge"), "b_id")
         )
     else:
-        joined = _cpu_spread(pairs).join(a_sets, "a_id").join(b_sets, "b_id")
-    # size-ratio prune (r12): Jaccard ≤ min(|A|,|B|)/max(|A|,|B|)
-    # exactly, so candidate pairs whose set sizes differ by more than
-    # the threshold ratio are dropped by two O(1) length reads before
-    # the O(|A|+|B|) array_intersect — LSH false positives are often
-    # exactly such cross-length boilerplate pairs.  The -1e-9 slack
-    # protects borderline-exact ratios from double rounding; the kept
-    # pairs (and the declared output) are unchanged.
-    _sa, _sb = F.size(F.col("a_items")), F.size(F.col("b_items"))
-    joined = joined.filter(
-        F.least(_sa, _sb).cast("double")
-        >= (F.lit(threshold) - F.lit(1e-9)) * F.greatest(_sa, _sb)
-    )
+        joined = spread_partitions(pairs).join(a_sets, "a_id").join(b_sets, "b_id")
+    return verified_jaccard(joined, threshold)
+
+
+def verified_jaccard(pairs: DataFrame, threshold: float) -> DataFrame:
+    """The verify step of every Jaccard pair operator: ``(a_id, b_id,
+    a_items, b_items)`` pairs → ``(a_id, b_id, jaccard_sim)`` for the
+    pairs whose exact Jaccard is ≥ ``threshold`` (compared raw, rounded
+    only for output).
+
+    Size-ratio prune: Jaccard ≤ min(|A|,|B|)/max(|A|,|B|) exactly
+    (|A∩B| ≤ min, |A∪B| ≥ max), so pairs whose set sizes differ by
+    more than the threshold ratio are dropped by two O(1) length reads
+    before the O(|A|+|B|) array_intersect — LSH false positives are
+    often exactly such cross-length boilerplate pairs.  The -1e-9
+    slack keeps borderline-exact ratios (double(0.55) rounds UP) from
+    being falsely pruned, so the kept pairs are unchanged.
+
+    +1e-9 before rounding: Jaccard is a small-denominator rational
+    that can sit exactly on the 6-decimal boundary, where engines'
+    ROUND implementations disagree."""
+    sa, sb = F.size(F.col("a_items")), F.size(F.col("b_items"))
+    prune = F.least(sa, sb).cast("double") >= (
+        F.lit(threshold) - F.lit(1e-9)
+    ) * F.greatest(sa, sb)
     return (
-        joined
-        .withColumn("_raw_jac", jaccard(F.col("a_items"), F.col("b_items")))
-        .filter(F.col("_raw_jac") >= threshold)
+        pairs.withColumn("_raw_jac", jaccard(F.col("a_items"), F.col("b_items")))
+        .filter(prune & (F.col("_raw_jac") >= threshold))
         .select(
             "a_id", "b_id", F.round(F.col("_raw_jac") + 1e-9, 6).alias("jaccard_sim")
         )
@@ -464,7 +494,7 @@ def simhash64(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> 
 
     # Arrow-batch parallelism = input partition count; a single-split
     # scan would md5-hash the whole corpus in one Python worker
-    return _cpu_spread(df).select(
+    return spread_partitions(df).select(
         F.col(id_col), _simhash(F.col(text_col)).alias("simhash")
     )
 
@@ -575,30 +605,19 @@ def semantic_dedup(
     assert_bounded_blocks(
         assigned, ("cid",), max_cell_rows, lsh_twin="knn_lsh_bucketed"
     )
-    # salt the within-cell domination join: one cell = one shuffle
-    # partition otherwise, serializing the cell's O(cell²) cosines
-    # into a single task (see salted_pair_sides)
-    xs, ys = salted_pair_sides(assigned, id_col, assigned, ("cid",))
-    x, y = xs.alias("x"), ys.alias("y")
-    cos = vec.cosine(F.col(f"x.{vec_col}"), F.col(f"y.{vec_col}"))
+    # within a cell, of each close pair the item farther from the seed
+    # (ties: the higher id) is dominated — (d2, id) is a strict total
+    # order and the cosine is symmetric, so each a < b pair is scored
+    # once
+    pairs = block_pairs(assigned, id_col, ("cid",), (vec_col, "d2"))
+    cos = vec.cosine(F.col(f"a_{vec_col}"), F.col(f"b_{vec_col}"))
     dominated = (
-        x.join(
-            y,
-            (F.col("x.cid") == F.col("y.cid"))
-            & (F.col("x._ps_a") == F.col("y._ps_b"))
-            & (F.col(f"x.{id_col}") != F.col(f"y.{id_col}")),
+        pairs.filter(cos > threshold)
+        .select(
+            F.when(F.col("b_d2") < F.col("a_d2"), F.col("a_id"))
+            .otherwise(F.col("b_id"))
+            .alias(id_col)
         )
-        .filter(
-            (cos > threshold)
-            & (
-                (F.col("y.d2") < F.col("x.d2"))
-                | (
-                    (F.col("y.d2") == F.col("x.d2"))
-                    & (F.col(f"y.{id_col}") < F.col(f"x.{id_col}"))
-                )
-            )
-        )
-        .select(F.col(f"x.{id_col}").alias(id_col))
         .distinct()
     )
     return assigned.join(dominated, id_col, "left_anti").select(

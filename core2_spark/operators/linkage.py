@@ -4,10 +4,10 @@ Classic entity resolution: blocking turns the O(N²) all-pairs
 edit-distance into an equi-join whose quadratic lives only inside each
 block; the blocking key (extra equality columns + a name prefix) is
 part of the operator contract, so oracles mirror it exactly.  Catalyst
-extracts the equality conjuncts into join keys and leaves the `<`
-ordering plus the edit-distance threshold as post-join filters — a
-plain shuffled hash join, no nested loop (plan-pinned in
-tests/test_plans.py).
+extracts the equality conjuncts into join keys and folds the `<`
+ordering, the length filter and the edit-distance threshold into the
+join condition — a salted sort-merge join, no nested loop (plan-pinned
+in tests/test_plans.py).
 """
 
 from __future__ import annotations
@@ -30,58 +30,46 @@ def blocked_fuzzy_pairs(
     """Candidate pairs within (block_cols × name prefix) blocks at
     Levenshtein ≤ ``max_dist``; each unordered pair appears once
     (left_key < right_key).  Output: (left_key, right_key, left_name,
-    right_name, edit_dist) ordered by the key pair."""
-    # SALTED pair join (dedup.salted_pair_sides): the edit-distance
-    # work is Σ block², and hashing by block key alone lands each
-    # whole block's quadratic on ONE task — the r11 skewed-corpus
-    # probe measured 7.05× (9.9 s → 70 s at sf1) when 3% of customers
-    # share a single (nation, 14-char surname prefix) block: ~10M
-    # Levenshtein comparisons serialized on one core while 31 sat
-    # idle.  Salting the a-side by key hash and replicating the
-    # b-side across the salt domain spreads ONE block's pairs over
-    # ``buckets`` tasks (each pair still meets exactly once, at a's
-    # salt); the b-side shuffle grows buckets×, which is the right
-    # trade — pair CPU, not shuffle bytes, is the binding cost, the
-    # same argument as the n-gram pair join.  At 100 TB the hot block
-    # is the expected shape (real name distributions are power-law),
-    # so the salt is unconditional, not a skew-detect special case.
-    from core2_spark.dedup import salted_pair_sides
-
-    prefix = F.substring(F.col(name_col), 1, prefix_len)
-    a = df.withColumn("_pfx", prefix)
-    b = df.withColumn("_pfx", prefix).select(
-        F.col(key_col).alias("_b_key"),
-        F.col(name_col).alias("_b_name"),
-        F.col("_pfx").alias("_b_pfx"),
-        *[F.col(c).alias(f"_b_{c}") for c in block_cols],
-    )
-    a2, b2 = salted_pair_sides(a, key_col, b, ("_pfx", *block_cols))
-    # Forbid broadcasting the replicated side: its Catalyst size
-    # estimate predates the salt explode (a 3 MB customer scan reads
-    # as broadcastable while the exploded relation is 32× that), and
-    # the planner's broadcast build of the replicated table is exactly
-    # what the 4 GB memory-pressure tier killed
-    # (notEnoughMemoryToBuildAndBroadcastTableError at sf5).  A merge
-    # join sorts and SPILLS both sides, so the plan survives any heap
-    # and any scale; the sort cost is on light (key, name, block)
+    right_name, edit_dist), in no particular order."""
+    # SALTED pair join (dedup.block_pairs): the edit-distance work is
+    # Σ block², and hashing by block key alone lands each whole
+    # block's quadratic on ONE task — the r11 skewed-corpus probe
+    # measured 7.05× (9.9 s → 70 s at sf1) when 3% of customers share
+    # a single (nation, 14-char surname prefix) block.  At 100 TB the
+    # hot block is the expected shape (real name distributions are
+    # power-law), so the salt is unconditional.
+    #
+    # shuffle_merge forbids broadcasting the replicated side: its
+    # Catalyst size estimate predates the salt explode (a 3 MB
+    # customer scan reads as broadcastable while the exploded
+    # relation is 32× that), and the planner's broadcast build of the
+    # replicated table is exactly what the 4 GB memory-pressure tier
+    # killed (notEnoughMemoryToBuildAndBroadcastTableError at sf5).  A
+    # merge join sorts and SPILLS both sides, so the plan survives any
+    # heap and any scale; the sort cost is on light (key, name, block)
     # rows.
-    b2 = b2.hint("shuffle_merge")
-    dist = F.levenshtein(F.col(name_col), F.col("_b_name"))
-    conds = [F.col(c) == F.col(f"_b_{c}") for c in block_cols]
-    conds.append(F.col("_pfx") == F.col("_b_pfx"))
-    conds.append(F.col("_ps_a") == F.col("_ps_b"))
-    conds.append(F.col(key_col) < F.col("_b_key"))
+    from core2_spark.dedup import block_pairs
+
+    keyed = df.withColumn("_pfx", F.substring(F.col(name_col), 1, prefix_len))
+    pairs = block_pairs(
+        keyed, key_col, ("_pfx", *block_cols), (name_col,), "shuffle_merge"
+    )
+    a_name, b_name = F.col(f"a_{name_col}"), F.col(f"b_{name_col}")
+    # exact filter before the O(len²) edit distance: names whose
+    # lengths differ by more than max_dist are farther apart than
+    # that; the bounded levenshtein stops at max_dist (-1 past it)
+    dist = F.levenshtein(a_name, b_name, max_dist)
     return (
-        a2.join(b2, on=conds)
-        .filter(dist <= max_dist)
+        pairs.filter(
+            (F.abs(F.length(a_name) - F.length(b_name)) <= max_dist) & (dist >= 0)
+        )
         .select(
-            F.col(key_col).alias("left_key"),
-            F.col("_b_key").alias("right_key"),
-            F.col(name_col).alias("left_name"),
-            F.col("_b_name").alias("right_name"),
+            F.col("a_id").alias("left_key"),
+            F.col("b_id").alias("right_key"),
+            a_name.alias("left_name"),
+            b_name.alias("right_name"),
             dist.cast("int").alias("edit_dist"),
         )
-        .orderBy("left_key", "right_key")
     )
 
 

@@ -22,6 +22,7 @@ from core2_spark import dedup, similarity
 from core2_spark.catalog import load_tables
 from core2_spark.functions import text as tx
 from core2_spark.functions import vectors as vec
+from core2_spark.plans import spread_partitions
 from core2_spark.queries.registry import query
 from core2_spark.queries.util import fround, pround
 
@@ -273,51 +274,15 @@ def dedup_ngram_jaccard_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     # all ~21M sf1 pairs ~1e-7), so |A∩B| and the Jaccard value are
     # unchanged — the DuckDB string-set oracle still hash-matches.
     g3h = F.transform(dedup.ngram_set(F.col("text"), 3), lambda s: F.xxhash64(s))
-    grams = d.select("doc_id", "lang", "source", g3h.alias("g3"))
-    a = grams.select(
-        F.col("doc_id").alias("a_id"), "lang", "source", F.col("g3").alias("a_g3")
+    grams = d.select("doc_id", "lang", "source", g3h.alias("items"))
+    # salted within-block pair join; shuffle_hash: sort-merge would
+    # sort the 32×-replicated array-carrying side, a hash build skips
+    # it (~9% at sf1)
+    pairs = dedup.block_pairs(
+        grams, "doc_id", ("lang", "source"), ("items",), "shuffle_hash"
     )
-    b = grams.select(
-        F.col("doc_id").alias("b_id"),
-        F.col("lang").alias("b_lang"),
-        F.col("source").alias("b_source"),
-        F.col("g3").alias("b_g3"),
-    )
-    # salt the pair join: without it each (lang, source) block's
-    # O(block²) trigram intersections land in the one task owning the
-    # block's hash partition (sf1: ~20 min single-core straggler)
-    a, b = dedup.salted_pair_sides(a, "a_id", b, ("lang", "source"))
-    # materialize the jaccard ONCE: referencing the expression in both
-    # the filter and the projection would evaluate array_intersect
-    # twice per pair (no CSE across operators) — measured 2× slower.
-    # size-ratio prune INSIDE the join condition (r12): Jaccard ≤
-    # min(|A|,|B|)/max(|A|,|B|) exactly (|A∩B| ≤ min, |A∪B| ≥ max), so
-    # pairs whose set sizes differ by more than the threshold ratio
-    # cannot reach 0.55 and are dropped by two O(1) length reads before
-    # the O(|A|+|B|) array_intersect ever runs; the -1e-9 slack keeps
-    # borderline-exact ratios (double(0.55) rounds UP) from being
-    # falsely pruned, so the kept-pair set — and the declared output —
-    # is unchanged.
-    sa, sb = F.size(F.col("a_g3")), F.size(F.col("b_g3"))
-    return (
-        a.join(
-            # shuffle_hash: sort-merge would sort the 32×-replicated
-            # array-carrying side; a hash build skips it (~9% at sf1)
-            b.hint("shuffle_hash"),
-            (F.col("lang") == F.col("b_lang"))
-            & (F.col("source") == F.col("b_source"))
-            & (F.col("_ps_a") == F.col("_ps_b"))
-            & (F.col("a_id") < F.col("b_id"))
-            & (
-                F.least(sa, sb).cast("double")
-                >= (F.lit(0.55) - F.lit(1e-9)) * F.greatest(sa, sb)
-            ),
-        )
-        .withColumn("_raw_jac", dedup.jaccard(F.col("a_g3"), F.col("b_g3")))
-        .filter(F.col("_raw_jac") >= 0.55)
-        .select(
-            "a_id", "b_id", F.round(F.col("_raw_jac") + 1e-9, 6).alias("trigram_jaccard")
-        )
+    return dedup.verified_jaccard(pairs, 0.55).withColumnRenamed(
+        "jaccard_sim", "trigram_jaccard"
     )
 
 
@@ -671,28 +636,17 @@ def embedding_label_near_dup_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     for the bucket; at scale the key is the LSH bucket itself)."""
     e = load_tables(spark, sf_dir, ("embeddings",))["embeddings"]
     base = e.select("vec_id", "label", vec.as_double(F.col("embedding")).alias("v"))
-    a = base.select(
-        F.col("vec_id").alias("a_id"), "label", F.col("v").alias("a_v")
-    )
-    b = base.select(
-        F.col("vec_id").alias("b_id"), F.col("label").alias("b_label"), F.col("v").alias("b_v")
-    )
-    # salt the within-label pair join: ~10 labels means ~10 shuffle
-    # partitions own ALL O(block²) cosines (sf1: one task ran 10+ min
-    # while 15 cores idled) — same fix as dedup_ngram_jaccard
-    a, b = dedup.salted_pair_sides(a, "a_id", b, ("label",))
+    # salted within-label pair join: ~10 labels means ~10 shuffle
+    # partitions would own ALL O(block²) cosines (sf1: one task ran
+    # 10+ min while 15 cores idled); hash build beats sorting the
+    # 32×-replicated vector side
+    pairs = dedup.block_pairs(base, "vec_id", ("label",), ("v",), "shuffle_hash")
     sim = vec.dot(F.col("a_v"), F.col("b_v")) / (
         vec.l2_norm(F.col("a_v")) * vec.l2_norm(F.col("b_v"))
     )
     return (
-        a.join(
-            # hash build beats sorting the 32×-replicated vector side
-            b.hint("shuffle_hash"),
-            (F.col("label") == F.col("b_label"))
-            & (F.col("_ps_a") == F.col("_ps_b"))
-            & (F.col("a_id") < F.col("b_id")),
-        )
-        # materialize the cosine ONCE (no CSE across filter+project)
+        pairs
+        # one filter: it folds into the join condition after a_id < b_id
         .withColumn("_raw_sim", sim)
         .filter(F.col("_raw_sim") >= 0.35)
         .select(
@@ -1564,7 +1518,7 @@ def curation_decontaminate_ngram_q(spark: SparkSession, sf_dir: str) -> DataFram
     # r11 (guide §2.5 input skew): the gram construction is the CPU
     # wall and a compact corpus scans as ONE parquet split, so without
     # an explicit spread the whole explode ran on one core.
-    g = dedup._cpu_spread(d).select("doc_id", F.explode(grams5).alias("g"))
+    g = spread_partitions(d).select("doc_id", F.explode(grams5).alias("g"))
     eval_g = g.filter(F.col("doc_id") % 7 == 0).select(
         F.col("doc_id").alias("eval_id"), "g"
     )
@@ -1624,7 +1578,7 @@ def curation_decontaminate_substring_q(
     # the compact corpus scans as one split — spread before the map
     # work or both sides' shingle explodes serialize on one core
     # (measured single-task at sf0.1 in the r11 sweep).
-    t = dedup._cpu_spread(d).select("doc_id", F.lower(F.col("text")).alias("s"))
+    t = spread_partitions(d).select("doc_id", F.lower(F.col("text")).alias("s"))
     n = F.length(F.col("s"))
 
     def shingles(step: int):
@@ -1997,7 +1951,7 @@ def _exact_substring_spans(
     # skew-proof: a mega-doc is already ~|s|/chunk windows here, so
     # its grams spread across every core instead of serializing on
     # one (measured at sf0.1: 5.1 s single-task → 1.0 s spread).
-    chunks = dedup._cpu_spread(chunks)
+    chunks = spread_partitions(chunks)
     wn = F.length(F.col("w"))
     idx = F.when(wn >= k, F.sequence(F.lit(1), wn - (k - 1))).otherwise(
         F.array().cast("array<int>")

@@ -320,6 +320,9 @@ def test_linkage_quoted_names_and_degenerate_params(spark):
         (4, "O'Brien#9999", 7),
         (5, "O'Brien#0001", 3),   # same name, different block
         (6, 'Sm"ith\\#0001', 7),
+        (7, "O'Brien#000122", 7),  # length +2 vs #0001: distance 2
+        (8, "O'Brien#0001223", 7),  # length +3 vs #0001: distance 3
+        (9, "O'Brien#0022", 7),   # same length as #0001: distance 2
     ]
     sdf = spark.createDataFrame(names, "c_custkey long, c_name string, c_nationkey int")
     con = _duckdb.connect()

@@ -295,6 +295,28 @@ def test_exact_substring_spans_chunked_boundaries(spark):
     assert got_default == want
 
 
+def test_block_pairs_matches_plain_self_join(spark):
+    """The salted within-block pair join returns exactly the pairs of
+    a plain ``a.blk = b.blk AND a.id < b.id`` self-join: a block
+    larger than the salt count, a singleton block, and NULL block keys
+    (which, as in SQL, pair with nothing — not with each other)."""
+    rows = [(i, "big", f"x{i}") for i in range(3 * dedup.PAIR_SALT + 5)]
+    rows += [(200, "solo", "s"), (201, None, "n1"), (202, None, "n2")]
+    rows += [(300 + i, "small", f"y{i}") for i in range(3)]
+    df = spark.createDataFrame(rows, "id long, blk string, x string")
+    pairs = dedup.block_pairs(df, "id", ("blk",), ("x",))
+    assert pairs.columns == ["a_id", "b_id", "a_x", "b_x"]
+    got = [tuple(r) for r in pairs.collect()]
+    a, b = df.alias("a"), df.alias("b")
+    want = a.join(
+        b, (F.col("a.blk") == F.col("b.blk")) & (F.col("a.id") < F.col("b.id"))
+    ).select("a.id", "b.id", "a.x", "b.x")
+    assert len(got) == len(set(got))
+    assert set(got) == {tuple(r) for r in want.collect()}
+    n = 3 * dedup.PAIR_SALT + 5
+    assert len(got) == n * (n - 1) // 2 + 3
+
+
 def test_semdedup_drops_planted_semantic_dup(spark):
     """A vector that is a tiny perturbation of another (cosine ~1,
     disjoint from any n-gram signal) must be dropped; the survivor is
@@ -313,6 +335,9 @@ def test_semdedup_drops_planted_semantic_dup(spark):
     # plant a near-identical copy of vec 12 (id far from the original)
     base = np.array(rows[12][1])
     rows.append((99, [float(x) for x in base + rng.normal(scale=1e-4, size=64)], 0))
+    # an exact copy of vec 20 under a higher id: the d2 tie keeps the
+    # lower id
+    rows.append((120, rows[20][1], 0))
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>, label int")
     import os
     import tempfile
@@ -327,6 +352,7 @@ def test_semdedup_drops_planted_semantic_dup(spark):
     # exactly one of the planted pair survives (both are bit-near-equal
     # so they land in the same Voronoi cell and cosine ~1 > 0.4)
     assert (12 in kept) != (99 in kept)
+    assert 20 in kept and 120 not in kept
     assert len(kept) < 41
 
 

@@ -106,6 +106,7 @@ def test_window_topk_partitions_by_group(spark):
     [
         "dedup_ngram_jaccard",
         "embedding_cosine_near_dup",
+        "embedding_label_near_dup",
         "knn_lsh_bucketed",
         "curation_decontaminate_ngram",
         "curation_decontaminate_substring",
@@ -402,6 +403,34 @@ def test_fuzzy_match_blocking_becomes_equi_join(spark):
     blocking key (nation x name prefix) — never a theta-only join."""
     plan = plan_of(QUERIES["entity_fuzzy_match_blocked"](spark, SF_DIR))
     assert plan.count("HashJoin") + plan.count("SortMergeJoin") >= 1, plan
+    # no global sort: its range-bounds sampling job re-runs the join
+    assert "rangepartitioning" not in plan, plan
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "dedup_ngram_jaccard",
+        "embedding_label_near_dup",
+        "dedup_semantic_embedding_clusters",
+        "entity_fuzzy_match_blocked",
+    ],
+)
+def test_pair_join_orders_before_verifying(spark, name):
+    """The salted pair join meets every unordered pair twice, once per
+    order; the cheap ``a_id < b_id`` conjunct must come before the
+    per-pair similarity in the join condition, or the expensive half
+    (set intersection, cosine, edit distance) runs on both orders."""
+    plan = plan_of(QUERIES[name](spark, SF_DIR))
+    conds = [
+        line for line in plan.splitlines()
+        if line.startswith("Join condition") and "b_id#" in line
+    ]
+    assert len(conds) == 1, plan
+    costly = [
+        conds[0].find(f) for f in ("array_intersect", "aggregate(", "levenshtein")
+    ]
+    assert conds[0].find("< b_id#") < min(i for i in costly if i >= 0), conds[0]
 
 
 @pytest.mark.parametrize(
